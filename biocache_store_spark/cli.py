@@ -141,9 +141,7 @@ def cmd_process(args) -> int:
         for c in keys[1:]:
             cond = cond | F.col(c).isin(wanted)
         raw = raw.filter(cond)
-    processed = run_pipeline(
-        raw, _dims_from_args(spark, args), hybrid_chain=not args.no_hybrid
-    )
+    processed = run_pipeline(raw, _dims_from_args(spark, args))
     partition = ("dataResourceUid",) if "dataResourceUid" in processed.columns else ()
     if partition:
         write_occurrence_store(processed, args.out, partition_by=partition)
@@ -288,9 +286,7 @@ def cmd_index_query(args) -> int:
 
     if not args.index_only:
         raw = scoped(_read(spark, args.raw), "--raw")
-        reprocessed = run_pipeline(
-            raw, _dims_from_args(spark, args), hybrid_chain=not args.no_hybrid
-        )
+        reprocessed = run_pipeline(raw, _dims_from_args(spark, args))
         if getattr(args, "prev_processed", None):
             prev = _read(spark, args.prev_processed)
             kept = prev.join(
@@ -2098,7 +2094,6 @@ def build_parser() -> argparse.ArgumentParser:
     sp.add_argument(
         "--uuids", help="comma-separated uuid/rowKey scope (ProcessUuids)"
     )
-    sp.add_argument("--no-hybrid", action="store_true")
     dim_opts(sp)
 
     sp = tool("sample", cmd_sample, "store -> cl/el samples per distinct point")
@@ -2165,7 +2160,6 @@ def build_parser() -> argparse.ArgumentParser:
     sp.add_argument("--include-deleted", dest="include_deleted",
                     action="store_true")
     sp.add_argument("--key-col", dest="key_col", default="id")
-    sp.add_argument("--no-hybrid", action="store_true")
     dim_opts(sp)
 
     sp = tool("ingest", cmd_ingest, "load -> process -> index")

@@ -41,6 +41,7 @@ _MATCHED_PARSED = {
     "left": "matched_lft",
     "right": "matched_rgt",
     "vernacularName": "matched_vernacularName",
+    "kingdom": "matched_kingdom",
     # offline duplicate markup (apply_duplicate_markup) lands as
     # _p-suffixed top-level columns (never the raw DwC term names — a
     # record's verbatim associatedOccurrences must not read as detection

@@ -28,10 +28,10 @@ from biocache_store_spark.operators.sampling import (
     enrich_records,
     sample_points,
 )
+from biocache_store_spark.processors.chain import enrich_classification
+# bound under this name because tracing tools patch this module attribute
 from biocache_store_spark.processors.chain import (
-    enrich_classification,
-    process_records,
-    process_records_hybrid,
+    process_records as process_records_hybrid,
 )
 from biocache_store_spark.processors.enrichment import (
     apply_sensitivity,
@@ -64,7 +64,6 @@ def run_pipeline(
     raw: DataFrame,
     dims: Dimensions | None = None,
     today: _dt.date | None = None,
-    hybrid_chain: bool = True,
 ) -> DataFrame:
     """raw occurrences -> fully processed records (the 'process' + 'sample'
     stages). Stage order mirrors Store.ingest: sensitivity runs after
@@ -161,12 +160,7 @@ def run_pipeline(
     pre_assertions = "assertions" in df.columns
     if pre_assertions:
         df = df.withColumnRenamed("assertions", "__pre_assertions")
-    # hybrid (default): vocabulary stages run as per-distinct-value
-    # broadcast map joins — with the column-zip batch conversion this is
-    # ~3-4x the round-3 chain throughput (tools/chain_bench.py);
-    # equivalence covered by test_hybrid_chain_equivalent
-    chain = process_records_hybrid if hybrid_chain else process_records
-    processed = chain(
+    processed = process_records_hybrid(
         df,
         default_values_by_resource=dims.default_values_by_resource,
         today=today,
@@ -186,14 +180,25 @@ def run_pipeline(
         points = distinct_points(processed)
         samples = sample_points(points, dims.cl_layers, dims.el_layers)
         processed = enrich_records(processed, samples)
-        if dims.state_layer is not None and "stateProvince" in processed.columns:
+        if dims.state_layer is not None:
             # the chain's location stage canonicalizes a raw state only
             # for no-coordinate records (LocationProcessor does the rest
             # via its layer intersect, which the Spark path expresses as
             # this sampling join) — so fill the processed state from the
             # designated state layer where it is still blank, exactly
-            # what the reference's intersect would have written
+            # what the reference's intersect would have written. Only
+            # the processed struct is written: the raw columns stay
+            # verbatim provider data.
+            from itertools import chain as _chain
+
             from pyspark.sql import functions as F
+
+            from biocache_store_spark.processors.location import (
+                STATE_TO_COUNTRY,
+            )
+
+            def nonblank(c):
+                return F.when(c == "", None).otherwise(c)
 
             # precedence mirrors the reference's processor order: the
             # raw-coordinate intersect (LocationProcessor runs BEFORE
@@ -205,36 +210,21 @@ def run_pipeline(
             if "__resolved_state" in processed.columns:
                 fills.append(F.col("__resolved_state"))
             fills.append(F.element_at("cl", dims.state_layer))
-            processed = processed.withColumn(
-                "stateProvince",
-                F.coalesce(
-                    F.when(F.col("stateProvince") == "", None).otherwise(
-                        F.col("stateProvince")
-                    ),
-                    *fills,
-                ),
+            state = F.coalesce(
+                nonblank(F.col("processed")["stateProvince"]), *fills
             )
-            if "country" in processed.columns:
-                # the reference infers country from the resolved state
-                # (StateProvinceToCountry); 8-entry literal map, codegen
-                from itertools import chain as _chain
-
-                from biocache_store_spark.processors.location import (
-                    STATE_TO_COUNTRY,
-                )
-
-                s2c = F.create_map(
-                    *[F.lit(v) for v in _chain(*STATE_TO_COUNTRY.items())]
-                )
-                processed = processed.withColumn(
-                    "country",
-                    F.coalesce(
-                        F.when(F.col("country") == "", None).otherwise(
-                            F.col("country")
-                        ),
-                        s2c[F.col("stateProvince")],
-                    ),
-                )
+            # the reference infers country from the resolved state
+            # (StateProvinceToCountry); 8-entry literal map, codegen
+            s2c = F.create_map(
+                *[F.lit(v) for v in _chain(*STATE_TO_COUNTRY.items())]
+            )
+            country = F.coalesce(nonblank(F.col("processed")["country"]), s2c[state])
+            processed = processed.withColumn(
+                "processed",
+                F.col("processed")
+                .withField("stateProvince", state)
+                .withField("country", country),
+            )
     if "__resolved_state" in processed.columns:
         processed = processed.drop("__resolved_state")
     return processed

@@ -162,6 +162,58 @@ PROCESSED_TYPE = T.StructType(
 )
 
 
+# EventProcessor is a pure function of these raw fields (+ `today`) and
+# real occurrence data repeats date tuples massively: the per-task memo key
+_EVENT_FIELDS_IN = (
+    "day",
+    "month",
+    "year",
+    "eventDate",
+    "eventDateEnd",
+    "verbatimEventDate",
+    "datePrecision",
+    "modified",
+    "dateIdentified",
+    "georeferencedDate",
+)
+
+
+# LocationProcessor is a pure function of these raw fields when the chain
+# supplies no per-record intersect callable (the Spark pipeline serves
+# layers via the sampling join instead); the reference memoizes location
+# processing per distinct point the same way (caches/LocationDAO.scala)
+_LOCATION_FIELDS_IN = (
+    "decimalLatitude",
+    "decimalLongitude",
+    "verbatimLatitude",
+    "verbatimLongitude",
+    "geodeticDatum",
+    "verbatimSRS",
+    "easting",
+    "northing",
+    "zone",
+    "gridReference",
+    "coordinateUncertaintyInMeters",
+    "coordinatePrecision",
+    "country",
+    "countryCode",
+    "stateProvince",
+    "habitat",
+    "verbatimDepth",
+    "verbatimElevation",
+    "minimumDepthInMeters",
+    "maximumDepthInMeters",
+    "minimumElevationInMeters",
+    "maximumElevationInMeters",
+    "georeferencedDate",
+    "georeferencedBy",
+    "georeferenceProtocol",
+    "georeferenceRemarks",
+    "georeferenceSources",
+    "georeferenceVerificationStatus",
+)
+
+
 def process_record(
     raw: dict,
     default_values: dict | None = None,
@@ -171,9 +223,6 @@ def process_record(
     default_country: str | None = None,
     last_processed: dict | None = None,
     last_assertions: list | None = None,
-    skip_catalyst_vocab: bool = False,
-    skip_event: bool = False,
-    skip_location: bool = False,
     event_memo: dict | None = None,
     location_memo: dict | None = None,
 ) -> tuple[dict, list]:
@@ -215,10 +264,9 @@ def process_record(
     #    establishmentMeans / recordedBy / identification + misc QAs)
     assertions += process_images(raw, processed)
     assertions += process_interactions(raw, processed)
-    if not skip_catalyst_vocab:
-        assertions += process_occurrence_status(raw, processed)
-        assertions += process_establishment_means(raw, processed)
-        assertions += process_recorded_by(raw, processed)
+    assertions += process_occurrence_status(raw, processed)
+    assertions += process_establishment_means(raw, processed)
+    assertions += process_recorded_by(raw, processed)
     assertions += process_identification_checks(raw)
     assertions += process_misc_occurrence(raw)
 
@@ -227,63 +275,57 @@ def process_record(
 
     # 4. AttributionProcessor licence canonicalization (the lookup half of
     #    ATTR is the broadcast join in processors/enrichment.py)
-    if not skip_catalyst_vocab:
-        assertions += process_license(raw, processed)
+    assertions += process_license(raw, processed)
 
     # 6. BasisOfRecordProcessor
-    if not skip_catalyst_vocab:
-        assertions += process_basis_of_record(raw, processed)
+    assertions += process_basis_of_record(raw, processed)
 
     # 7. EventProcessor
-    if not skip_event:
-        hit = None
-        key = None
-        if event_memo is not None:
-            try:
-                key = tuple(raw.get(f) for f in _EVENT_FIELDS_IN)
-                hit = event_memo.get(key)
-            except TypeError:  # unhashable raw value — run uncached
-                key = None
-        if hit is None:
-            hit = process_event(raw, today)
-            if key is not None:
-                event_memo[key] = hit
-        event_processed, event_assertions = hit
-        processed.update(event_processed)
-        assertions += event_assertions
+    hit = None
+    key = None
+    if event_memo is not None:
+        try:
+            key = tuple(raw.get(f) for f in _EVENT_FIELDS_IN)
+            hit = event_memo.get(key)
+        except TypeError:  # unhashable raw value — run uncached
+            key = None
+    if hit is None:
+        hit = process_event(raw, today)
+        if key is not None:
+            event_memo[key] = hit
+    event_processed, event_assertions = hit
+    processed.update(event_processed)
+    assertions += event_assertions
 
     # 8. LocationProcessor
-    if not skip_location:
-        hit = None
-        key = None
-        # memo only valid without a per-record intersect callable (its
-        # results could vary per record beyond the raw fields)
-        if location_memo is not None and intersect is None:
-            try:
-                key = tuple(raw.get(f) for f in _LOCATION_FIELDS_IN)
-                hit = location_memo.get(key)
-            except TypeError:
-                key = None
-        if hit is None:
-            hit = process_location(
-                raw,
-                intersect=intersect,
-                species_habitats=species_habitats,
-                default_country=default_country,
-            )
-            if key is not None:
-                location_memo[key] = hit
-        loc_processed, loc_assertions = hit
-        processed.update(loc_processed)
-        assertions += loc_assertions
+    hit = None
+    key = None
+    # memo only valid without a per-record intersect callable (its
+    # results could vary per record beyond the raw fields)
+    if location_memo is not None and intersect is None:
+        try:
+            key = tuple(raw.get(f) for f in _LOCATION_FIELDS_IN)
+            hit = location_memo.get(key)
+        except TypeError:
+            key = None
+    if hit is None:
+        hit = process_location(
+            raw,
+            intersect=intersect,
+            species_habitats=species_habitats,
+            default_country=default_country,
+        )
+        if key is not None:
+            location_memo[key] = hit
+    loc_processed, loc_assertions = hit
+    processed.update(loc_processed)
+    assertions += loc_assertions
 
     # 10. TypeStatusProcessor
-    if not skip_catalyst_vocab:
-        assertions += process_type_status(raw, processed)
+    assertions += process_type_status(raw, processed)
 
     # 11. IdentificationQualifierProcessor
-    if not skip_catalyst_vocab:
-        assertions += process_identification_qualifier(raw, processed)
+    assertions += process_identification_qualifier(raw, processed)
 
     # 12. ReprocessingProcessor (retain prior sampling when coords unchanged)
     from biocache_store_spark.processors.identification import process_reprocessing
@@ -313,17 +355,14 @@ def process_records(
     df: DataFrame,
     default_values_by_resource: dict[str, dict] | None = None,
     today: _dt.date | None = None,
-    skip_catalyst_vocab: bool = False,
-    skip_event: bool = False,
-    skip_location: bool = False,
-    memoize_pure_stages: bool = True,
 ) -> DataFrame:
-    """raw occurrences -> + processed struct, assertions array, kosher flag; pure stages memoized per task (memoize_pure_stages=True, 100k cap).
-    One mapInPandas pass; no shuffle at scale (the min-parallelism
-    repartition only fires when the input has fewer splits than cores).
+    """raw occurrences -> + processed struct, assertions array, kosher flag; pure stages memoized per task (100k cap).
+    One mapInPandas pass running all 12 stages in reference order; no
+    shuffle at scale (the min-parallelism repartition only fires when the
+    input has fewer splits than cores).
 
-    `memoize_pure_stages` (default on) runs EventProcessor and
-    LocationProcessor once per distinct input tuple within each task —
+    EventProcessor and LocationProcessor run once per distinct input
+    tuple within each task —
     the reference's LRU location cache (Config.scala:165-173) — capped
     at 100k entries per memo so a pathological all-unique corpus stays
     memory-bounded (it pays one wasted dict probe per record, nothing
@@ -353,12 +392,12 @@ def process_records(
     )
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        event_memo: dict | None = {} if memoize_pure_stages else None
-        location_memo: dict | None = {} if memoize_pure_stages else None
+        event_memo: dict = {}
+        location_memo: dict = {}
         for pdf in batches:
-            if event_memo is not None and len(event_memo) > 100_000:
+            if len(event_memo) > 100_000:
                 event_memo.clear()
-            if location_memo is not None and len(location_memo) > 100_000:
+            if len(location_memo) > 100_000:
                 location_memo.clear()
             processed_col = []
             assertions_col = []
@@ -379,9 +418,6 @@ def process_records(
                     raw,
                     dv,
                     today,
-                    skip_catalyst_vocab=skip_catalyst_vocab,
-                    skip_event=skip_event,
-                    skip_location=skip_location,
                     event_memo=event_memo,
                     location_memo=location_memo,
                 )
@@ -409,374 +445,6 @@ def process_records(
             yield out
 
     return df.mapInPandas(run, schema=schema)
-
-
-# Vocabulary stages liftable out of the per-record pass: each is a pure
-# function of ONE raw column, so it can run once per distinct value instead
-# of once per record (the Spark-native form of the reference's LRU caches,
-# caches/*DAO.scala). Order here is the reference stage order
-# (Processors.scala:16-29: misc occStatus/estMeans ... bor ... typeStatus).
-_CATALYST_VOCAB_STAGES: tuple[tuple[str, object], ...] = (
-    ("occurrenceStatus", process_occurrence_status),
-    ("establishmentMeans", process_establishment_means),
-    ("recordedBy", process_recorded_by),
-    ("license", process_license),
-    ("basisOfRecord", process_basis_of_record),
-    ("typeStatus", process_type_status),
-    ("identificationQualifier", process_identification_qualifier),
-)
-
-
-def _vocab_stage_map(df: DataFrame, col: str, runner) -> DataFrame:
-    """distinct(df[col]) -> (value, canonical, assertions) relation.
-
-    The stage function runs once per DISTINCT value in a tiny Arrow batch —
-    vocabulary columns are low-cardinality by nature, so this is a cheap
-    partial-agg distinct followed by a broadcastable dimension, however many
-    records the fact side has."""
-    out_schema = T.StructType(
-        [
-            T.StructField("v", T.StringType()),
-            T.StructField("canonical", T.StringType()),
-            T.StructField("asserts", ASSERTION_TYPE),
-        ]
-    )
-    vals = df.select(F.col(col).cast("string").alias("v")).distinct()
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            canon, asst = [], []
-            for v in pdf["v"]:
-                v = None if v is None or (isinstance(v, float) and pd.isna(v)) else v
-                processed: dict = {}
-                qas = runner({col: v}, processed)
-                value = processed.get(col)
-                canon.append(
-                    "|".join(value) if isinstance(value, (list, tuple)) else value
-                )
-                asst.append(
-                    _qa_dicts(qas)
-                )
-            yield pd.DataFrame({"v": pdf["v"], "canonical": canon, "asserts": asst})
-
-    return vals.mapInPandas(run, out_schema)
-
-
-# EventProcessor is a pure function of these raw fields (+ `today`); real
-# occurrence data repeats date tuples massively, so the stage can run once
-# per DISTINCT tuple and join back — the memoization-as-relation shape the
-# vocab stages use, generalized to a composite key.
-_EVENT_FIELDS_IN = (
-    "day",
-    "month",
-    "year",
-    "eventDate",
-    "eventDateEnd",
-    "verbatimEventDate",
-    "datePrecision",
-    "modified",
-    "dateIdentified",
-    "georeferencedDate",
-)
-_EVENT_FIELDS_OUT = (
-    "eventDate",
-    "eventDateEnd",
-    "day",
-    "month",
-    "year",
-    "datePrecision",
-    "modified",
-    "dateIdentified",
-    "georeferencedDate",
-)
-
-
-# LocationProcessor input fields (pure function of these when the chain
-# supplies no per-record intersect callable — the Spark pipeline serves
-# layers via the sampling join instead). The reference itself memoizes
-# location processing per distinct point (caches/LocationDAO.scala's `loc`
-# table); this is that design as a relation.
-_LOCATION_FIELDS_IN = (
-    "decimalLatitude",
-    "decimalLongitude",
-    "verbatimLatitude",
-    "verbatimLongitude",
-    "geodeticDatum",
-    "verbatimSRS",
-    "easting",
-    "northing",
-    "zone",
-    "gridReference",
-    "coordinateUncertaintyInMeters",
-    "coordinatePrecision",
-    "country",
-    "countryCode",
-    "stateProvince",
-    "habitat",
-    "verbatimDepth",
-    "verbatimElevation",
-    "minimumDepthInMeters",
-    "maximumDepthInMeters",
-    "minimumElevationInMeters",
-    "maximumElevationInMeters",
-    "georeferencedDate",
-    "georeferencedBy",
-    "georeferenceProtocol",
-    "georeferenceRemarks",
-    "georeferenceSources",
-    "georeferenceVerificationStatus",
-)
-_LOCATION_FIELDS_OUT = (
-    "decimalLatitude",
-    "decimalLongitude",
-    "geodeticDatum",
-    "coordinateUncertaintyInMeters",
-    "stateProvince",
-    "country",
-    "lga",
-    "biome",
-    "habitat",
-    "verbatimDepth",
-    "verbatimElevation",
-    "minimumDepthInMeters",
-    "maximumDepthInMeters",
-    "minimumElevationInMeters",
-    "maximumElevationInMeters",
-)
-
-
-def _distinct_stage_map(
-    df: DataFrame,
-    in_fields: tuple[str, ...],
-    out_fields: tuple[str, ...],
-    stage_fn,
-    prefix: str,
-) -> DataFrame:
-    """distinct(input tuple) -> per-field (value, was_set) + the stage's
-    assertion array. `was_set` preserves the reference's dict-update
-    semantics: a stage can explicitly set a field to None, which must
-    still override a resource default at merge time.
-
-    `stage_fn(raw_subset) -> (processed_dict, assertions)`."""
-    schema_fields: list = []
-    for f in out_fields:
-        schema_fields.append(T.StructField(f"{prefix}{f}", T.StringType()))
-        schema_fields.append(T.StructField(f"{prefix}{f}_set", T.BooleanType()))
-    out_schema = T.StructType(
-        [T.StructField(f"__in_{f}", T.StringType()) for f in in_fields]
-        + schema_fields
-        + [T.StructField(f"{prefix}asserts", ASSERTION_TYPE)]
-    )
-    vals = df.select(
-        *[F.col(f).cast("string").alias(f"__in_{f}") for f in in_fields]
-    ).distinct()
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            cols = [f"__in_{f}" for f in in_fields]
-            arrays = [pdf[c].tolist() for c in cols]
-            out_rows: dict[str, list] = {c: [] for c in out_schema.names}
-            for row in zip(*arrays):
-                raw = {
-                    f: (None if v is None or (isinstance(v, float) and v != v) else v)
-                    for f, v in zip(in_fields, row)
-                }
-                processed, assertions = stage_fn(raw)
-                for c, v in zip(cols, row):
-                    out_rows[c].append(v)
-                for f in out_fields:
-                    value = processed.get(f)
-                    out_rows[f"{prefix}{f}"].append(
-                        "|".join(value) if isinstance(value, (list, tuple)) else value
-                    )
-                    out_rows[f"{prefix}{f}_set"].append(f in processed)
-                out_rows[f"{prefix}asserts"].append(
-                    _qa_dicts(assertions)
-                )
-            yield pd.DataFrame(out_rows)
-
-    return vals.mapInPandas(run, out_schema)
-
-
-def _event_stage_map(df: DataFrame, today: _dt.date | None) -> DataFrame:
-    return _distinct_stage_map(
-        df,
-        _EVENT_FIELDS_IN,
-        _EVENT_FIELDS_OUT,
-        lambda raw: process_event(raw, today),
-        "__ev_",
-    )
-
-
-def _location_stage_map(df: DataFrame) -> DataFrame:
-    return _distinct_stage_map(
-        df,
-        _LOCATION_FIELDS_IN,
-        _LOCATION_FIELDS_OUT,
-        process_location,
-        "__loc_",
-    )
-
-
-def process_records_hybrid(
-    df: DataFrame,
-    default_values_by_resource: dict[str, dict] | None = None,
-    today: _dt.date | None = None,
-    event_by_distinct: bool = True,
-    location_by_distinct: bool = False,
-) -> DataFrame:
-    """The chain split Catalyst-side where semantics allow.
-
-    Same contract as process_records (processed struct, assertions array,
-    geospatially_kosher), but the four vocabulary stages — basisOfRecord
-    (BasisOfRecordProcessor.scala:22-41), typeStatus
-    (TypeStatusProcessor.scala:26-47), occurrenceStatus and
-    establishmentMeans (MiscellaneousProcessor.scala:21-178) — run as
-    per-distinct-value broadcast map joins instead of inside the per-record
-    Python loop, and (with `event_by_distinct`, the default) the whole
-    EventProcessor runs once per distinct date-field tuple and joins back —
-    real occurrence data repeats dates massively, so the expensive fuzzy
-    parsing cost becomes proportional to distinct dates, not records. The
-    Arrow pass keeps only the stages that are genuinely per-record
-    (coordinates/gridref, media, identification).
-
-    Assertion MULTISET matches process_records exactly; array order differs
-    (per-record assertions first, then event, then the vocab stages in
-    reference order). geospatially_kosher is unaffected: neither event nor
-    vocabulary stages emit geospatial codes.
-    """
-    today = today or _dt.date.today()  # one job, one date (see
-    # process_records — the distinct-tuple event map has the same
-    # midnight-drift hazard as the memo)
-    added_cols = []
-    for col, _ in _CATALYST_VOCAB_STAGES:
-        if col not in df.columns:
-            df = df.withColumn(col, F.lit(None).cast("string"))
-            added_cols.append(col)
-    if event_by_distinct:
-        for col in _EVENT_FIELDS_IN:
-            if col not in df.columns:
-                df = df.withColumn(col, F.lit(None).cast("string"))
-                added_cols.append(col)
-    if location_by_distinct:
-        for col in _LOCATION_FIELDS_IN:
-            if col not in df.columns:
-                df = df.withColumn(col, F.lit(None).cast("string"))
-                added_cols.append(col)
-
-    base = process_records(
-        df,
-        default_values_by_resource,
-        today,
-        skip_catalyst_vocab=True,
-        skip_event=event_by_distinct,
-        skip_location=location_by_distinct,
-    )
-
-    out = base
-    event_fields: set = set()
-    if event_by_distinct:
-        event_fields = set(_EVENT_FIELDS_OUT)
-        ev_map = _event_stage_map(df, today)
-        # composite null-safe equi-join on the 10 raw event fields; the
-        # distinct relation is usually small (dates repeat) but is NOT
-        # forced broadcast — AQE decides, and at corpus scale this is a
-        # plain shuffle join on the tuple key
-        cond = None
-        for f in _EVENT_FIELDS_IN:
-            c = F.col(f).cast("string").eqNullSafe(F.col(f"__in_{f}"))
-            cond = c if cond is None else (cond & c)
-        out = out.join(ev_map, cond, "left").drop(
-            *[f"__in_{f}" for f in _EVENT_FIELDS_IN]
-        )
-    location_fields: set = set()
-    if location_by_distinct:
-        location_fields = set(_LOCATION_FIELDS_OUT)
-        loc_map = _location_stage_map(df)
-        cond = None
-        for f in _LOCATION_FIELDS_IN:
-            c = F.col(f).cast("string").eqNullSafe(F.col(f"__in_{f}"))
-            cond = c if cond is None else (cond & c)
-        out = out.join(loc_map, cond, "left").drop(
-            *[f"__in_{f}" for f in _LOCATION_FIELDS_IN]
-        )
-    for col, runner in _CATALYST_VOCAB_STAGES:
-        mapping = _vocab_stage_map(df, col, runner).select(
-            F.col("v").alias(f"__{col}_v"),
-            F.col("canonical").alias(f"__{col}_canonical"),
-            F.col("asserts").alias(f"__{col}_asserts"),
-        )
-        out = out.join(
-            F.broadcast(mapping),
-            F.col(col).cast("string").eqNullSafe(F.col(f"__{col}_v")),
-            "left",
-        ).drop(f"__{col}_v")
-
-    # basisOfRecord only: an already-defaulted processed value suppresses
-    # the missing-BoR assertion (BasisOfRecordProcessor.scala:25-29).
-    bor_blank = F.col("basisOfRecord").isNull() | (
-        F.trim(F.col("basisOfRecord").cast("string")) == ""
-    )
-    empty_asserts = F.array().cast(ASSERTION_TYPE)
-    bor_asserts = F.when(
-        bor_blank & F.col("processed")["basisOfRecord"].isNotNull(), empty_asserts
-    ).otherwise(F.col("__basisOfRecord_asserts"))
-
-    vocab_fields = {c for c, _ in _CATALYST_VOCAB_STAGES}
-
-    def field_expr(f):
-        if f in vocab_fields:
-            return F.coalesce(F.col(f"__{f}_canonical"), F.col("processed")[f])
-        # dict-update semantics: an explicitly-set None overrides a resource
-        # default, an unset field falls back; location (stage 8) overrides
-        # event (stage 7) for any shared field, matching loop order
-        expr = F.col("processed")[f]
-        if f in event_fields:
-            expr = F.when(F.col(f"__ev_{f}_set"), F.col(f"__ev_{f}")).otherwise(expr)
-        if f in location_fields:
-            expr = F.when(F.col(f"__loc_{f}_set"), F.col(f"__loc_{f}")).otherwise(expr)
-        return expr
-
-    merged = F.struct(*[field_expr(f).alias(f) for f in PROCESSED_FIELDS])
-    assert_parts = [F.col("assertions")]
-    if event_fields:
-        assert_parts.append(F.coalesce(F.col("__ev_asserts"), empty_asserts))
-    if location_fields:
-        assert_parts.append(F.coalesce(F.col("__loc_asserts"), empty_asserts))
-    for col, _ in _CATALYST_VOCAB_STAGES:
-        part = bor_asserts if col == "basisOfRecord" else F.col(f"__{col}_asserts")
-        assert_parts.append(F.coalesce(part, empty_asserts))
-    merged_asserts = F.concat(*assert_parts)
-    out = out.withColumn("processed", merged).withColumn(
-        "assertions", merged_asserts
-    )
-    if location_fields:
-        # location is the only emitter of kosher-gating codes; recompute the
-        # flag from the merged array (FullRecordMapper semantics)
-        from biocache_store_spark.processors.assertions import AssertionCodes
-
-        gating = F.array(
-            *[F.lit(c) for c in sorted(AssertionCodes.GEOSPATIAL_KOSHER_CODES)]
-        )
-        out = out.withColumn(
-            "geospatially_kosher",
-            ~F.exists(
-                F.col("assertions"),
-                lambda a: F.array_contains(gating, a["code"])
-                & (a["qa_status"] == 0),
-            ),
-        )
-    drop = [f"__{c}_canonical" for c in vocab_fields]
-    drop += [f"__{c}_asserts" for c in vocab_fields]
-    if event_fields:
-        drop += [f"__ev_{f}" for f in _EVENT_FIELDS_OUT]
-        drop += [f"__ev_{f}_set" for f in _EVENT_FIELDS_OUT]
-        drop.append("__ev_asserts")
-    if location_fields:
-        drop += [f"__loc_{f}" for f in _LOCATION_FIELDS_OUT]
-        drop += [f"__loc_{f}_set" for f in _LOCATION_FIELDS_OUT]
-        drop.append("__loc_asserts")
-    return out.drop(*drop, *added_cols)
 
 
 def enrich_classification(df: DataFrame, taxa: DataFrame) -> DataFrame:
@@ -809,9 +477,10 @@ def enrich_classification(df: DataFrame, taxa: DataFrame) -> DataFrame:
         F.col("lft").alias("l"),
         F.col("rgt").alias("g"),
         F.col("vernacularName").alias("v"),
+        F.col("kingdom").alias("k"),
     )
     attrs = (
-        taxa.groupBy(F.col("taxonConceptID").alias("__attr_lsid"))
+        names.groupBy(F.col("taxonConceptID").alias("__attr_lsid"))
         .agg(F.min(attr_payload).alias("__a"))
         .select(
             "__attr_lsid",
@@ -819,6 +488,7 @@ def enrich_classification(df: DataFrame, taxa: DataFrame) -> DataFrame:
             F.col("__a.l").alias("matched_lft"),
             F.col("__a.g").alias("matched_rgt"),
             F.col("__a.v").alias("matched_vernacularName"),
+            F.col("__a.k").alias("matched_kingdom"),
         )
     )
     joined = (

@@ -1967,16 +1967,15 @@ def user_assertion_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "chain_hybrid",
     doc=(
-        "Hybrid chain split (processors/chain.process_records_hybrid): the "
-        "four vocabulary stages — basisOfRecord "
+        "The record chain's vocabulary stages (processors/chain."
+        "process_records, one memoized per-record pass): basisOfRecord "
         "(BasisOfRecordProcessor.scala:22-41), typeStatus "
         "(TypeStatusProcessor.scala:26-47), occurrenceStatus and "
-        "establishmentMeans (MiscellaneousProcessor.scala:21-178) — run as "
-        "per-distinct-value broadcast map joins (the Spark-native form of "
-        "the reference's LRU caches) while the Arrow pass keeps only the "
-        "per-record stages. Exercises the default-value suppression path "
-        "(blank basisOfRecord + per-resource default) plus all four vocab "
-        "merges; the oracle replays the canonicalization in SQL."
+        "establishmentMeans (MiscellaneousProcessor.scala:21-178), matched "
+        "through the vocabulary caches (the reference's LRU caches). "
+        "Exercises the default-value suppression path (blank basisOfRecord "
+        "+ per-resource default) plus all four vocab stages; the oracle "
+        "replays the canonicalization in SQL."
     ),
     oracle="""
         SELECT p_partkey,
@@ -2007,7 +2006,7 @@ def user_assertion_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def chain_hybrid(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from biocache_store_spark.processors.chain import process_records_hybrid
+    from biocache_store_spark.processors.chain import process_records
 
     part = read_table(spark, sf_dir, "part")
     k = F.col("p_partkey")
@@ -2041,7 +2040,7 @@ def chain_hybrid(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise(F.lit("zzz-no-such-status"))
         .alias("occurrenceStatus"),
     )
-    out = process_records_hybrid(
+    out = process_records(
         occ,
         default_values_by_resource={"drDefault": {"basisOfRecord": "HumanObservation"}},
     )

@@ -63,6 +63,42 @@ def test_full_ingest(spark):
     assert facets == {"PreservedSpecimen": 2, "HumanObservation": 1}
 
 
+def test_benchmark_trace_points_resolve(spark, monkeypatch):
+    """The lifecycle benchmark's traced run reaches run_pipeline's steps by
+    replacing module attributes; every attribute it patches must exist,
+    and the chain hook must be the one run_pipeline calls."""
+    import importlib
+
+    from biocache_store_spark.pipeline import Dimensions, run_pipeline
+
+    monkeypatch.syspath_prepend(
+        os.path.join(os.path.dirname(os.path.dirname(__file__)), "lifecycle_bench")
+    )
+    lifecycle = importlib.import_module("lifecycle")
+    calls: list[str] = []
+
+    class RecordingTracer:
+        def patch(self, module, attr, name):
+            assert hasattr(module, attr), f"{module.__name__}.{attr}"
+            original = getattr(module, attr)
+
+            def traced(*args, **kwargs):
+                calls.append(name)
+                return original(*args, **kwargs)
+
+            monkeypatch.setattr(module, attr, traced)
+
+    lifecycle.trace_program_internals(RecordingTracer())
+    raw = spark.createDataFrame(
+        [("t1", "dr1", "-35.2", "144.8"), ("t2", "dr1", None, None)],
+        "occurrenceID string, dataResourceUid string, decimalLatitude string, "
+        "decimalLongitude string",
+    )
+    out = run_pipeline(raw, Dimensions(), dt.date(2026, 1, 1))
+    assert calls == ["processors.chain"]
+    assert out.count() == 2
+
+
 def test_ingest_store_reprocess_lifecycle(spark, tmp_path):
     """The operational loop a reference user runs: ingest -> persist the
     resource-partitioned store -> reprocess ONE resource (partition-scoped

@@ -92,9 +92,17 @@ def test_chain(spark, occurrences, taxa):
 
 
 def test_chain_plan_is_single_pass(spark, occurrences):
-    out = process_records(occurrences, today=TODAY)
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange" not in plan  # no shuffle: scan -> mapInPandas only
+    """scan -> one mapInPandas, no shuffle: for the chain alone and for
+    run_pipeline with no dimensions (nothing to join)."""
+    from biocache_store_spark.pipeline import Dimensions, run_pipeline
+
+    for out in (
+        process_records(occurrences, today=TODAY),
+        run_pipeline(occurrences, Dimensions(), today=TODAY),
+    ):
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        assert plan.count("MapInPandas") == 1, plan
+        assert "Exchange" not in plan, plan
 
 
 def test_assertion_rollups(spark, occurrences):
@@ -111,12 +119,11 @@ def test_assertion_rollups(spark, occurrences):
     assert by_id["occ1"]["n_passed"] >= 5
 
 
-def test_hybrid_chain_equivalent(spark):
-    """process_records_hybrid (vocab stages as per-distinct broadcast map
-    joins) must produce the same processed struct, the same assertion
-    MULTISET, and the same kosher flag as the full per-record pass."""
-    from biocache_store_spark.processors.chain import process_records_hybrid
+def _ddl(cols):
+    return ", ".join(f"{c} string" for c in cols)
 
+
+def _vocab_case():
     rows = [
         ("h1", "dr1", "PreservedSpecimen", "holotype material", "native",
          "present", "1978-12-31", "-35.2", "144.8", "WGS84"),
@@ -133,96 +140,42 @@ def test_hybrid_chain_equivalent(spark):
         "establishmentMeans", "occurrenceStatus", "eventDate",
         "decimalLatitude", "decimalLongitude", "geodeticDatum",
     ]
-    df = spark.createDataFrame(rows, cols)
     defaults = {
         "dr2": {"basisOfRecord": "HumanObservation"},
         "dr3": {"typeStatus": "neotype"},
     }
-    full = {r["occurrenceID"]: r
-            for r in process_records(df, defaults, today=TODAY).collect()}
-    hyb = {r["occurrenceID"]: r
-           for r in process_records_hybrid(df, defaults, today=TODAY).collect()}
-    assert full.keys() == hyb.keys()
-    for k in full:
-        assert full[k]["processed"].asDict() == hyb[k]["processed"].asDict(), k
-        assert sorted(map(tuple, full[k]["assertions"])) == sorted(
-            map(tuple, hyb[k]["assertions"])
-        ), k
-        assert full[k]["geospatially_kosher"] == hyb[k]["geospatially_kosher"], k
+    return rows, cols, defaults
 
 
-def test_pure_stage_memo_equivalent(spark):
-    """The round-10 per-task event/location memo (memoize_pure_stages)
-    must be invisible in the output: rows sharing date/coordinate tuples
-    (memo hits) and rows with unique tuples produce exactly the
-    unmemoized results, assertions included."""
-    rows = []
-    for i in range(40):
-        # 4 distinct date tuples x 5 distinct coordinate tuples across
-        # 40 records -> heavy memo reuse; a few deliberately dirty
-        rows.append((
-            f"m{i:02d}", "dr1", "PreservedSpecimen", None, None, None,
-            ["1978-12-31", "2000-01-01", "bogus-date", None][i % 4],
-            ["-35.2", "0", "91.0", None, "abc"][i % 5],
-            ["144.8", "0", "200.0", None, "144.8"][i % 5],
-            "WGS84",
-        ))
-    schema = (
-        "occurrenceID string, dataResourceUid string, basisOfRecord string, "
-        "typeStatus string, establishmentMeans string, occurrenceStatus "
-        "string, eventDate string, decimalLatitude string, decimalLongitude "
-        "string, geodeticDatum string"
-    )
-    df = spark.createDataFrame(rows, schema)
-    memo = {r["occurrenceID"]: r
-            for r in process_records(df, today=TODAY).collect()}
-    plain = {r["occurrenceID"]: r
-             for r in process_records(
-                 df, today=TODAY, memoize_pure_stages=False
-             ).collect()}
-    assert memo.keys() == plain.keys()
-    for k in memo:
-        assert memo[k]["processed"].asDict() == plain[k]["processed"].asDict(), k
-        assert [tuple(a) for a in memo[k]["assertions"]] == [
-            tuple(a) for a in plain[k]["assertions"]
-        ], k
-        assert memo[k]["geospatially_kosher"] == plain[k]["geospatially_kosher"], k
-
-
-def test_hybrid_chain_missing_vocab_columns(spark):
-    """Hybrid path with none of the vocab columns present in the input:
-    occurrenceStatus defaults to present (assumed), others stay null, and
-    the output schema matches the full pass (no helper columns leak)."""
-    from biocache_store_spark.processors.chain import process_records_hybrid
-
-    df = spark.createDataFrame(
-        [("m1", "dr1", "-35.2", "144.8", "WGS84")],
-        ["occurrenceID", "dataResourceUid", "decimalLatitude",
-         "decimalLongitude", "geodeticDatum"],
-    )
-    full = process_records(df, today=TODAY)
-    hyb = process_records_hybrid(df, today=TODAY)
-    assert [f.name for f in full.schema.fields] == [
-        f.name for f in hyb.schema.fields
-    ]
-    fr, hr = full.collect()[0], hyb.collect()[0]
-    assert hr["processed"]["occurrenceStatus"] == "present"
-    assert fr["processed"].asDict() == hr["processed"].asDict()
-    assert sorted(map(tuple, fr["assertions"])) == sorted(
-        map(tuple, hr["assertions"])
-    )
-
-
-def test_hybrid_event_by_distinct_equivalent(spark):
-    """The per-distinct-tuple event stage must reproduce the dict-update
-    semantics exactly — including process_event explicitly setting
-    eventDate to None (invalid future year), which must override a
-    resource default, and range nullification via eventDateEnd."""
-    from biocache_store_spark.processors.chain import process_records_hybrid
-
+def _memo_case():
+    # 4 distinct date tuples x 5 distinct coordinate tuples across 40
+    # records -> heavy per-task memo reuse; a few deliberately dirty
     rows = [
-        # future year: parse rejects it outright, so the dr3 default
-        # survives on both sides (the was_set=False merge path)
+        (f"m{i:02d}", "dr1", "PreservedSpecimen", None, None, None,
+         ["1978-12-31", "2000-01-01", "bogus-date", None][i % 4],
+         ["-35.2", "0", "91.0", None, "abc"][i % 5],
+         ["144.8", "0", "200.0", None, "144.8"][i % 5],
+         "WGS84")
+        for i in range(40)
+    ]
+    cols = [
+        "occurrenceID", "dataResourceUid", "basisOfRecord", "typeStatus",
+        "establishmentMeans", "occurrenceStatus", "eventDate",
+        "decimalLatitude", "decimalLongitude", "geodeticDatum",
+    ]
+    return rows, cols, {}
+
+
+def _missing_vocab_case():
+    rows = [("v1", "dr1", "-35.2", "144.8", "WGS84")]
+    cols = ["occurrenceID", "dataResourceUid", "decimalLatitude",
+            "decimalLongitude", "geodeticDatum"]
+    return rows, cols, {}
+
+
+def _event_case():
+    rows = [
+        # future year: parse rejects it outright, so the dr3 default survives
         ("e1", "dr3", "3025-01-02", None, None, None, None),
         # components assemble; event fields from day/month/year
         ("e2", "dr1", None, None, "12", "3", "1999"),
@@ -232,26 +185,10 @@ def test_hybrid_event_by_distinct_equivalent(spark):
     ]
     cols = ["occurrenceID", "dataResourceUid", "eventDate", "eventDateEnd",
             "month", "day", "year"]
-    df = spark.createDataFrame(rows, cols)
-    defaults = {"dr3": {"eventDate": "1999-01-01"}}
-    full = {r["occurrenceID"]: r
-            for r in process_records(df, defaults, today=TODAY).collect()}
-    hyb = {r["occurrenceID"]: r
-           for r in process_records_hybrid(df, defaults, today=TODAY).collect()}
-    for k in full:
-        assert full[k]["processed"].asDict() == hyb[k]["processed"].asDict(), k
-        assert sorted(map(tuple, full[k]["assertions"])) == sorted(
-            map(tuple, hyb[k]["assertions"])
-        ), k
-    assert hyb["e1"]["processed"]["eventDate"] == "1999-01-01"  # default kept
+    return rows, cols, {"dr3": {"eventDate": "1999-01-01"}}
 
 
-def test_hybrid_location_by_distinct_equivalent(spark):
-    """Opt-in location lift: distinct-tuple LocationProcessor must match
-    the in-loop pass, including the geospatially_kosher recomputation from
-    the merged assertion array (zero-coords and transposed fixtures)."""
-    from biocache_store_spark.processors.chain import process_records_hybrid
-
+def _location_case():
     rows = [
         ("l1", "dr1", "-35.5", "149.25", "WGS84", "Australia"),
         ("l2", "dr1", "0", "0", "WGS84", None),            # zero -> not kosher
@@ -261,18 +198,77 @@ def test_hybrid_location_by_distinct_equivalent(spark):
     ]
     cols = ["occurrenceID", "dataResourceUid", "decimalLatitude",
             "decimalLongitude", "geodeticDatum", "country"]
-    df = spark.createDataFrame(rows, cols)
-    full = {r["occurrenceID"]: r
-            for r in process_records(df, today=TODAY).collect()}
-    hyb = {r["occurrenceID"]: r
-           for r in process_records_hybrid(
-               df, today=TODAY, location_by_distinct=True
-           ).collect()}
-    for k in full:
-        assert full[k]["processed"].asDict() == hyb[k]["processed"].asDict(), k
-        assert sorted(map(tuple, full[k]["assertions"])) == sorted(
-            map(tuple, hyb[k]["assertions"])
-        ), k
-        assert full[k]["geospatially_kosher"] == hyb[k]["geospatially_kosher"], k
-    assert not hyb["l2"]["geospatially_kosher"]
-    assert hyb["l1"]["geospatially_kosher"]
+    return rows, cols, {}
+
+
+@pytest.mark.parametrize(
+    "case",
+    [_vocab_case, _memo_case, _missing_vocab_case, _event_case, _location_case],
+    ids=["vocab", "memo", "missing_vocab", "event", "location"],
+)
+def test_chain_matches_per_record_reference(spark, case):
+    """process_records (one Arrow pass, per-task event/location memo,
+    vocabulary match cache) must reproduce the plain per-record
+    process_record exactly: the processed struct, the assertion array in
+    order, and the kosher flag."""
+    from biocache_store_spark.processors.assertions import geospatially_kosher
+    from biocache_store_spark.processors.chain import (
+        PROCESSED_FIELDS,
+        process_record,
+    )
+
+    rows, cols, defaults = case()
+    df = spark.createDataFrame(rows, _ddl(cols))
+    out_df = process_records(df, defaults, today=TODAY)
+    # no helper columns leak: input columns plus the three chain outputs
+    assert out_df.columns == cols + ["processed", "assertions", "geospatially_kosher"]
+    out = {r["occurrenceID"]: r for r in out_df.collect()}
+    assert out.keys() == {r[0] for r in rows}
+    for row in rows:
+        raw = dict(zip(cols, row))
+        processed, assertions = process_record(
+            raw, defaults.get(raw["dataResourceUid"]), TODAY
+        )
+        got = out[raw["occurrenceID"]]
+        expected = {
+            f: "|".join(v) if isinstance(v := processed.get(f), (list, tuple)) else v
+            for f in PROCESSED_FIELDS
+        }
+        assert got["processed"].asDict() == expected, raw["occurrenceID"]
+        assert [tuple(a) for a in got["assertions"]] == [
+            (a.code, a.name, a.qa_status, a.comment) for a in assertions
+        ], raw["occurrenceID"]
+        assert got["geospatially_kosher"] == geospatially_kosher(assertions)
+
+    if case is _event_case:
+        assert out["e1"]["processed"]["eventDate"] == "1999-01-01"  # default kept
+    if case is _missing_vocab_case:
+        assert out["v1"]["processed"]["occurrenceStatus"] == "present"
+    if case is _location_case:
+        assert not out["l2"]["geospatially_kosher"]
+        assert out["l1"]["geospatially_kosher"]
+
+
+def test_index_kingdom_from_matched_taxon(spark):
+    """The index's parsed kingdom is the matched taxon's kingdom (null when
+    the name does not match); raw_kingdom stays the verbatim value."""
+    from biocache_store_spark.pipeline import Dimensions, ingest
+
+    taxa = spark.createDataFrame(
+        [("Macropus rufus", "urn:lsid:mr", "species", 10, 11, "Red Kangaroo",
+          "Animalia")],
+        "scientificName string, taxonConceptID string, taxonRank string, "
+        "lft int, rgt int, vernacularName string, kingdom string",
+    )
+    records = spark.createDataFrame(
+        [("k1", "dr1", "Macropus rufus", "animalia"),
+         ("k2", "dr1", "Unknownus speciesus", "Plantae")],
+        "occurrenceID string, dataResourceUid string, scientificName string, "
+        "kingdom string",
+    )
+    rows = {r["id"]: r for r in ingest(records, Dimensions(taxa=taxa), TODAY)
+            .select("id", "kingdom", "raw_kingdom").collect()}
+    assert rows["k1"]["kingdom"] == "Animalia"
+    assert rows["k1"]["raw_kingdom"] == "animalia"
+    assert rows["k2"]["kingdom"] is None
+    assert rows["k2"]["raw_kingdom"] == "Plantae"

@@ -349,7 +349,8 @@ def test_state_resolved_from_layer_before_sensitivity(spark, rules):
     # coordinates were withheld before the enrichment sampling ran (the
     # reference writes the intersect result before SDS generalizes); it
     # rides a temp column, never the raw stateProvince field
-    assert got["r1"]["stateProvince"] == "New South Wales"
+    assert got["r1"]["processed"]["stateProvince"] == "New South Wales"
+    assert got["r1"]["stateProvince"] is None
     assert "__resolved_state" not in out.columns
     # r2: raw state wins; Queensland is outside the rule's zone
     assert got["r2"]["sensitive"] is False
@@ -370,6 +371,7 @@ def test_index_state_filled_from_layer_for_coordinate_records(spark):
     writes it."""
     from pyspark.sql import functions as F
 
+    from biocache_store_spark.operators.index_projection import build_index
     from biocache_store_spark.pipeline import Dimensions, run_pipeline
 
     cl = spark.createDataFrame(
@@ -378,15 +380,24 @@ def test_index_state_filled_from_layer_for_coordinate_records(spark):
         "layerID string, name string, wkt string",
     )
     records = spark.createDataFrame(
-        [("r1", "-31.25", "146.92", None, None)],
+        [("r1", "-31.25", "146.92", None, None),
+         ("r2", "-31.25", "146.92", "", "")],
         "rowKey string, decimalLatitude string, decimalLongitude string, "
         "stateProvince string, country string",
     )
     out = run_pipeline(records, Dimensions(cl_layers=cl, state_layer="cl22"))
-    row = out.collect()[0]
-    assert row["stateProvince"] == "New South Wales"
-    # country inferred from the resolved state (StateProvinceToCountry)
-    assert row["country"] == "Australia"
+    rows = {r["rowKey"]: r for r in out.collect()}
+    for key, verbatim in (("r1", None), ("r2", "")):
+        row = rows[key]
+        assert row["processed"]["stateProvince"] == "New South Wales"
+        # country inferred from the resolved state (StateProvinceToCountry)
+        assert row["processed"]["country"] == "Australia"
+        # the raw columns stay verbatim provider data
+        assert row["stateProvince"] == verbatim
+        assert row["country"] == verbatim
+    idx = build_index(out.filter("rowKey = 'r1'")).collect()[0]
+    assert idx["state"] == "New South Wales"
+    assert idx["raw_state"] is None
     # without the designated layer the gap remains (documented chain shape)
     out2 = run_pipeline(records, Dimensions(cl_layers=cl))
-    assert out2.collect()[0]["stateProvince"] is None
+    assert out2.collect()[0]["processed"]["stateProvince"] is None

@@ -1,9 +1,11 @@
-"""Chain throughput: full-Python 12-stage pass vs hybrid (vocab in Catalyst).
+"""Chain throughput: the 12-stage memoized per-record pass.
 
-Synthesizes occurrence-shaped records from the customer table at
-$SPARK_GRAFT_SF_DIR (default sf0.1) and times process_records vs
-process_records_hybrid end-to-end (count() forces the full pass).
-Prints one JSON line: records, per-variant wall seconds and records/sec.
+Synthesizes occurrence-shaped records from the lineitem table at
+$SPARK_GRAFT_SF_DIR (default sf0.1), or `--rows N` of them from
+spark.range, and times process_records end-to-end (a noop write forces
+the full pass). Prints one JSON line: records, wall seconds and
+records/sec. `--stages [N]` instead attributes single-threaded wall time
+to each stage over N synthetic records.
 """
 
 from __future__ import annotations
@@ -18,10 +20,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import functions as F  # noqa: E402
 
 from biocache_store_spark.io import read_table  # noqa: E402
-from biocache_store_spark.processors.chain import (  # noqa: E402
-    process_records,
-    process_records_hybrid,
-)
+from biocache_store_spark.processors.chain import process_records  # noqa: E402
 from biocache_store_spark.session import get_spark  # noqa: E402
 
 
@@ -179,62 +178,27 @@ def main() -> None:
         profile_stages(int(sys.argv[2]) if len(sys.argv) > 2 else 500_000)
         return
     n_rows = None
-    args = list(sys.argv[1:])
-    variants = None  # None = all four
-    if "--variants" in args:
-        i = args.index("--variants")
-        if i + 1 >= len(args):
-            raise SystemExit("--variants needs a comma-separated list, "
-                             "e.g. --variants full,hybrid")
-        variants = set(args[i + 1].split(","))
-        known = {"full", "full_nomemo", "hybrid", "hybrid_loc"}
-        unknown = variants - known
-        if unknown:
-            raise SystemExit(f"unknown variants {sorted(unknown)}; "
-                             f"choose from {sorted(known)}")
-        del args[i:i + 2]
+    args = sys.argv[1:]
     if len(args) > 1 and args[0] == "--rows":
         n_rows = int(float(args[1]))
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     spark = get_spark()
     occ = occurrences(spark, sf_dir, n_rows)
     n = occ.count()
-    out = {"records": n, "sf_dir": sf_dir}
-    # warm the JVM/codegen/Python workers so neither variant pays first-call cost
+    # warm the JVM/codegen/Python workers so the timed pass pays no
+    # first-call cost
     process_records(occ.limit(2000)).write.format("noop").mode("overwrite").save()
-    process_records_hybrid(occ.limit(2000)).write.format("noop").mode(
-        "overwrite"
-    ).save()
-    # hybrid+loc: additionally run the LocationProcessor once per distinct
-    # coordinate tuple (real occurrence data repeats coordinates heavily —
-    # the reference keeps a 10k-entry location cache for the same reason,
-    # Config.scala:165-173; opt-in because pathological corpora with
-    # near-unique GPS coords would pay the distinct+join for nothing)
-    def hybrid_loc(df):
-        return process_records_hybrid(df, location_by_distinct=True)
-
-    hybrid_loc(occ.limit(2000)).write.format("noop").mode("overwrite").save()
-
-    # A/B the round-10 per-task event/location memo against the r9 path
-    def full_nomemo(df):
-        return process_records(df, memoize_pure_stages=False)
-
-    for name, fn in (
-        ("full", process_records),
-        ("full_nomemo", full_nomemo),
-        ("hybrid", process_records_hybrid),
-        ("hybrid_loc", hybrid_loc),
-    ):
-        if variants is not None and name not in variants:
-            continue
-        t0 = time.time()
-        fn(occ).select(
-            F.col("processed")["basisOfRecord"], F.col("geospatially_kosher")
-        ).write.format("noop").mode("overwrite").save()
-        sec = time.time() - t0
-        out[f"{name}_sec"] = round(sec, 3)
-        out[f"{name}_rps"] = round(n / sec)
-    print(json.dumps(out))
+    t0 = time.time()
+    process_records(occ).select(
+        F.col("processed")["basisOfRecord"], F.col("geospatially_kosher")
+    ).write.format("noop").mode("overwrite").save()
+    sec = time.time() - t0
+    print(json.dumps({
+        "records": n,
+        "sf_dir": sf_dir,
+        "chain_sec": round(sec, 3),
+        "chain_rps": round(n / sec),
+    }))
 
 
 if __name__ == "__main__":
